@@ -11,9 +11,11 @@ deterministic skewed transcripts table — then prints ONE JSON line:
      "unit": "sec", "queries": {...}, "sf": ..., "throughput": {...}}
 
 Per-query numbers are full plan executions (noop sink — no collect
-overhead, no result truncation). The N-vs-4N scaling-efficiency run
-lives in tools/bench_scaling.py (spark-submit subprocesses) and its
-latest results are inlined here when present.
+overhead, no result truncation). The result reports only what this run
+measured: ``default_parallelism`` is the session's, ``cpu_count`` the
+host's. The N-vs-4N scaling-efficiency run lives in
+tools/bench_scaling.py (spark-submit subprocesses) and writes its own
+file.
 """
 
 from __future__ import annotations
@@ -374,6 +376,7 @@ def main() -> None:
             "spark.hadoop.parquet.enable.dictionary": "false",
         },
     )
+    default_parallelism = spark.sparkContext.defaultParallelism
     try:
         qtimes = _bench_queries(spark, sf_dir)
         streaming = _bench_streaming(spark, work_dir)
@@ -394,12 +397,9 @@ def main() -> None:
         "sf": sf,
         "throughput": streaming,
         "backpressure": backpressure,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "default_parallelism": default_parallelism,
+        "cpu_count": os.cpu_count(),
     }
-    scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALING.json")
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as f:
-            result["scaling"] = json.load(f)
     print(json.dumps(result))
 
 

@@ -120,6 +120,51 @@ def _column_refs(col: Column) -> set:
     return refs
 
 
+# The stateful families, each listed once: (family tag, compiler-ctx
+# lookup attribute, batch resolver method). Batch frames resolve each
+# op with its method; streaming frames fold every family in the fused
+# state pass (``_join_fused_state``), except that a run holding only a
+# Cache op keeps the union resolver (``_join_cache_streaming``).
+_STATE_FAMILIES = (
+    ("window", "window_lookups", "_join_window_count"),
+    ("seq", "seq_lookups", "_join_seq_match"),
+    ("cache", "cache_lookups", "_join_cache"),
+    ("wdistinct", "distinct_lookups", "_join_window_distinct"),
+    ("unique", "unique_lookups", "_join_unique_count"),
+    ("wminmax", "wminmax_lookups", "_join_window_minmax"),
+    ("seen", "seen_lookups", "_join_seen_before"),
+    ("sess", "session_lookups", "_join_session_count"),
+    ("last", "last_lookups", "_join_last_value"),
+    ("wsum", "wsum_lookups", "_join_window_sum"),
+    ("decay", "decay_lookups", "_join_decay_score"),
+    ("rl", "ratelimit_lookups", "_join_rate_limit"),
+    ("age", "age_lookups", "_join_key_age"),
+    ("burst", "burst_lookups", "_join_burstiness"),
+    ("tent", "tent_lookups", "_join_transition_entropy"),
+)
+
+
+def _spec_cols(spec: dict) -> list[Column]:
+    """The columns a deferred lookup spec (state op or HasLabel)
+    reads: its Column-valued fields, plus every paired Set
+    statement's for a Cache."""
+    cols = [v for v in spec.values() if isinstance(v, Column)]
+    for s in spec.get("sets", ()):
+        cols += [v for v in s.values() if isinstance(v, Column)]
+    return cols
+
+
+def _cache_result(spec: dict, raw: Column) -> Column:
+    """A CacheGet's output from its raw looked-up value: the default
+    on a miss, and the default wherever the Get's gate is off."""
+    result = F.coalesce(raw, spec["default_col"])
+    if spec["gate"] is not None:
+        result = F.when(
+            F.coalesce(spec["gate"], F.lit(False)), result
+        ).otherwise(spec["default_col"])
+    return result
+
+
 @dataclass
 class InputBindings:
     """How SML's implicit inputs map onto input DataFrame columns.
@@ -1003,201 +1048,28 @@ class CompiledRuleset:
             )
         )
         df = df.join(looked_up, df[rid] == looked_up["_crid"], "left").drop("_crid")
-        result = F.coalesce(F.col("_cval"), spec["default_col"])
-        if spec["gate"] is not None:
-            result = F.when(
-                F.coalesce(spec["gate"], F.lit(False)), result
-            ).otherwise(spec["default_col"])
-        return df.select("*", result.alias(name)).drop("_cval")
+        return df.select("*", _cache_result(spec, F.col("_cval")).alias(name)).drop("_cval")
 
     def _join_window_count(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one IncrementWindow/GetWindowCount. Batch frames:
+        """Resolve one IncrementWindow/GetWindowCount on a BATCH frame:
         event-time range window (one shuffle on the key, whole-stage
-        codegen). Streaming frames: applyInPandasWithState keyed by
-        the key value — the state is the deque of in-window increment
+        codegen). Streaming frames route through the fused state pass,
+        whose per-key state is the deque of in-window increment
         timestamps (the Redis zset, ref example_plugins/src/udfs/
-        cache.py:161-227), carried across micro-batches; every input
-        column passes through, so no stream-stream join-back is
-        needed. Late rows within a batch are handled by sorting on
-        event time; cross-batch late data follows watermark limits
-        (counts are judged against the retained deque)."""
-        name = spec["name"]
+        cache.py:161-227)."""
+        from pyspark.sql import Window as W
+
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
         win = int(spec["window_seconds"])
         cap = int(spec["cap"])
         gate = spec["gate"]
-        if not df.isStreaming:
-            from pyspark.sql import Window as W
-
-            w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
-            count = F.sum(F.when(spec["incremented"], 1).otherwise(0)).over(w)
-            if cap:
-                count = F.least(count, F.lit(cap))
-            if gate is not None:
-                count = F.when(F.coalesce(gate, F.lit(False)), count).otherwise(F.lit(0))
-            return df.select("*", F.coalesce(count, F.lit(0)).cast("long").alias(name))
-
-        import json as _json
-        import os as _os
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        # KEY COALESCING: the state op groups by hash-BUCKET of the key,
-        # not the key itself, and keeps a {key: deque} map per bucket.
-        # applyInPandasWithState pays a fixed per-GROUP cost (Arrow
-        # slicing + state round-trip, measured ~0.4 ms); with millions
-        # of conversations that per-group tax IS the throughput ceiling
-        # (benched 2.6x: ~20k -> ~52k turns/s on the window-counter
-        # rule at 40k convs). Bucketing amortizes it ~(keys/buckets)x
-        # while per-key semantics stay bit-identical: rows sort
-        # (key, sec) and each key's segment folds against its own
-        # deque, exactly as the per-key grouping did. State per bucket
-        # is the sum of its keys' in-window deques — same total bytes,
-        # fewer state-store rows. Skew: xxhash64 spreads keys
-        # uniformly; a hot KEY still serializes (inherent), but a hot
-        # key no longer adds a per-group tax to every other key.
-        n_buckets = _state_bucket_count()
-        aug = df.select(
-            "*",
-            spec["key_col"].cast("string").alias("__wc_key"),
-            sec.alias("__wc_sec"),
-            F.coalesce(spec["incremented"], F.lit(False)).alias("__wc_inc"),
-            (
-                F.coalesce(gate, F.lit(False)) if gate is not None else F.lit(True)
-            ).alias("__wc_gate"),
-            F.pmod(
-                F.xxhash64(spec["key_col"].cast("string")), F.lit(n_buckets)
-            ).cast("int").alias("__wc_bkt"),
-        )
-        out_schema = T.StructType(
-            [f for f in aug.schema.fields if not f.name.startswith("__wc_")]
-            + [T.StructField(name, T.LongType())]
-        )
-        passthrough_cols = [f.name for f in aug.schema.fields if not f.name.startswith("__wc_")]
-        _NULL_KEY = "\x00"  # JSON map slot for a null key value
-
-        def fold(pdf, smap):
-            """One micro-batch's worth of one bucket: sort, fold each
-            key segment against its carried deque, mutate ``smap`` in
-            place, return the output frame. Shared VERBATIM by both
-            state engines (applyInPandasWithState and the
-            transformWithStateInPandas port below), so their outputs
-            are identical by construction."""
-            import numpy as np
-
-            pdf = pdf.sort_values(["__wc_key", "__wc_sec"], kind="stable", na_position="last")
-            keys = pdf["__wc_key"].to_numpy(dtype=object)
-            sec_a = pdf["__wc_sec"].to_numpy(dtype="int64")
-            inc_a = pdf["__wc_inc"].to_numpy(dtype=bool)
-            gate_a = pdf["__wc_gate"].to_numpy(dtype=bool)
-            counts = np.empty(len(sec_a), dtype="int64")
-            # contiguous per-key segments of the (key, sec)-sorted batch
-            change = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(keys)]))
-            for s, e in zip(starts, ends):
-                mk = keys[s] if keys[s] is not None else _NULL_KEY
-                entries = smap.get(mk, ())
-                seg_sec = sec_a[s:e]
-                # all increment timestamps visible this batch for this
-                # key: carried deque + this batch's gated rows, sorted
-                inc_ts = np.sort(
-                    np.concatenate(
-                        [np.asarray(entries, dtype="int64"), seg_sec[inc_a[s:e]]]
-                    )
-                )
-                # count at row i = increments in [sec_i - win + 1,
-                # sec_i]; a row's own increment sorts <= sec_i so it is
-                # included, later rows' (> sec_i) are not — exactly the
-                # sequential zadd-then-zcard semantics, vectorized
-                hi = np.searchsorted(inc_ts, seg_sec, side="right")
-                lo = np.searchsorted(inc_ts, seg_sec - win + 1, side="left")
-                counts[s:e] = hi - lo
-                keep = int(seg_sec.max()) - win + 1
-                kept = inc_ts[np.searchsorted(inc_ts, keep, side="left"):]
-                if len(kept):
-                    smap[mk] = [int(x) for x in kept]
-                elif mk in smap:
-                    del smap[mk]  # empty deque = evict the slot
-            if cap:
-                counts = np.minimum(counts, cap)
-            counts = np.where(gate_a, counts, 0)
-            out = pdf[passthrough_cols].copy()
-            out[name] = counts.astype("int64")
-            return out
-
-        def fn(key, pdf_iter, state):
-            smap = _json.loads(state.get[0]) if state.exists else {}
-            # Materialize the WHOLE group before sorting: pdf_iter
-            # yields ~maxRecordsPerBatch-row Arrow chunks and a later
-            # chunk may hold earlier timestamps — per-chunk sorting
-            # with per-chunk state folds would make counts depend on
-            # chunk boundaries and diverge from the batch path. One
-            # bucket's micro-batch volume bounds the concat.
-            chunks = [c for c in pdf_iter if len(c)]
-            if not chunks:
-                state.update((_json.dumps(smap),))
-                return
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            out = fold(pdf, smap)
-            state.update((_json.dumps(smap),))
-            yield out
-
-        # OSPREY_STATE_ENGINE=tws: the Spark 4 transformWithState
-        # port of this family (survey §1.5's forward path — typed
-        # state handles, TTL, RocksDB changelog checkpointing on a
-        # real cluster). Same bucket grouping, same `fold`, state in
-        # a named ValueState instead of the applyInPandasWithState
-        # tuple; outputs are identical by construction and pinned by
-        # tests/test_tws_window_counter.py. The TWS state-server
-        # protocol needs the `protobuf` package (absent from this
-        # container, like the Kafka jars) — on a standard cluster
-        # image the flag works as-is.
-        if _os.environ.get("OSPREY_STATE_ENGINE", "apply") == "tws":
-            from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-            state_schema = T.StructType(
-                [T.StructField("entries_json", T.StringType())]
-            )
-
-            class _WcProc(StatefulProcessor):
-                def init(self, handle):
-                    self._st = handle.getValueState("wc_entries", state_schema)
-
-                def handleInputRows(self, key, rows, timerValues):
-                    got = self._st.get() if self._st.exists() else None
-                    smap = _json.loads(got[0]) if got is not None else {}
-                    chunks = [c for c in rows if len(c)]
-                    if chunks:
-                        pdf = (
-                            pd.concat(chunks, ignore_index=True)
-                            if len(chunks) > 1
-                            else chunks[0]
-                        )
-                        out = fold(pdf, smap)
-                        self._st.update((_json.dumps(smap),))
-                        yield out
-                    else:
-                        self._st.update((_json.dumps(smap),))
-
-                def close(self):
-                    pass
-
-            return aug.groupBy("__wc_bkt").transformWithStateInPandas(
-                _WcProc(),
-                outputStructType=out_schema,
-                outputMode="append",
-                timeMode="None",
-            )
-
-        return aug.groupBy("__wc_bkt").applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=T.StructType([T.StructField("entries_json", T.StringType())]),
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+        w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
+        count = F.sum(F.when(spec["incremented"], 1).otherwise(0)).over(w)
+        if cap:
+            count = F.least(count, F.lit(cap))
+        if gate is not None:
+            count = F.when(F.coalesce(gate, F.lit(False)), count).otherwise(F.lit(0))
+        return df.select("*", F.coalesce(count, F.lit(0)).cast("long").alias(spec["name"]))
 
     def _join_window_distinct(self, df: DataFrame, spec: dict) -> DataFrame:
         """Resolve one GetWindowDistinct on a BATCH frame: distinct
@@ -1430,8 +1302,6 @@ class CompiledRuleset:
         the Arrow boundary — the wide feature frame stays JVM-side.
         Streaming frames route through the fused state pass carrying
         [tokens_units, last_sec] per key."""
-        import os as _os
-
         import pandas as pd
         from pyspark.sql import types as T
 
@@ -1624,108 +1494,28 @@ class CompiledRuleset:
         )
 
     def _join_seq_match(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one SequenceMatches. Batch frames: collect the
+        """Resolve one SequenceMatches on a BATCH frame: collect the
         rolling last-K symbol window with a rows-between window (one
         shuffle on the key, whole-stage codegen, JVM `rlike`).
-        Streaming frames: key-coalesced applyInPandasWithState whose
-        per-key state is the ≤K-char symbol suffix — the reference's
-        tool_seq shape — carried across micro-batches, so a pattern
-        completed by a later batch's event matches when that event
-        arrives. Within a batch rows apply in (event time, order)
-        order; the suffix semantics make streaming == batch whenever
-        (event time, order) is a total order per key (equivalence- and
-        restart-tested)."""
-        name = spec["name"]
+        Streaming frames route through the fused state pass, whose
+        per-key state is the <=K-char symbol suffix (the reference's
+        tool_seq shape), so a pattern completed by a later batch's
+        event matches when that event arrives."""
+        from pyspark.sql import Window as W
+
         k = int(spec["last_k"])
-        pattern = spec["pattern"]
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
         order_cols = [sec] + (
             [spec["order_col"]] if spec["order_col"] is not None else []
         )
-        if not df.isStreaming:
-            from pyspark.sql import Window as W
-
-            w = (
-                W.partitionBy(spec["key_col"])
-                .orderBy(*order_cols)
-                .rowsBetween(-(k - 1), 0)
-            )
-            suffix = F.array_join(F.collect_list(spec["symbol_col"]).over(w), "")
-            matched = F.coalesce(suffix.rlike(pattern), F.lit(False))
-            return df.select("*", matched.alias(name))
-
-        import json as _json
-        import os as _os
-        import re as _re
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        rx = _re.compile(pattern)
-        n_buckets = _state_bucket_count()
-        aug = df.select(
-            "*",
-            spec["key_col"].cast("string").alias("__sq_key"),
-            sec.alias("__sq_sec"),
-            (
-                spec["order_col"].cast("double")
-                if spec["order_col"] is not None
-                else F.lit(0.0)
-            ).alias("__sq_ord"),
-            spec["symbol_col"].alias("__sq_sym"),
-            F.pmod(F.xxhash64(spec["key_col"].cast("string")), F.lit(n_buckets))
-            .cast("int")
-            .alias("__sq_bkt"),
+        w = (
+            W.partitionBy(spec["key_col"])
+            .orderBy(*order_cols)
+            .rowsBetween(-(k - 1), 0)
         )
-        out_schema = T.StructType(
-            [f for f in aug.schema.fields if not f.name.startswith("__sq_")]
-            + [T.StructField(name, T.BooleanType())]
-        )
-        passthrough_cols = [
-            f.name for f in aug.schema.fields if not f.name.startswith("__sq_")
-        ]
-        _NULL_KEY = "\x00"
-
-        def fn(key, pdf_iter, state):
-            smap = _json.loads(state.get[0]) if state.exists else {}
-            chunks = [c for c in pdf_iter if len(c)]
-            if not chunks:
-                state.update((_json.dumps(smap),))
-                return
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(
-                ["__sq_key", "__sq_sec", "__sq_ord"], kind="stable", na_position="last"
-            )
-            keys = pdf["__sq_key"].to_numpy(dtype=object)
-            syms = pdf["__sq_sym"].to_numpy(dtype=object)
-            matched = [False] * len(keys)
-            prev = None
-            suffix = ""
-            for i, (mk_raw, ch) in enumerate(zip(keys, syms)):
-                mk = mk_raw if mk_raw is not None else _NULL_KEY
-                if mk != prev:
-                    if prev is not None:
-                        smap[prev] = suffix
-                    suffix = smap.get(mk, "")
-                    prev = mk
-                suffix = (suffix + ch)[-k:]
-                matched[i] = rx.search(suffix) is not None
-            if prev is not None:
-                smap[prev] = suffix
-            out = pdf[passthrough_cols].copy()
-            out[name] = matched
-            state.update((_json.dumps(smap),))
-            yield out
-
-        return aug.groupBy("__sq_bkt").applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=T.StructType(
-                [T.StructField("suffix_json", T.StringType())]
-            ),
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+        suffix = F.array_join(F.collect_list(spec["symbol_col"]).over(w), "")
+        matched = F.coalesce(suffix.rlike(spec["pattern"]), F.lit(False))
+        return df.select("*", matched.alias(spec["name"]))
 
     def _join_fused_state(
         self, df: DataFrame, fspecs: list[tuple[str, dict]]
@@ -1733,7 +1523,9 @@ class CompiledRuleset:
         """Resolve a RUN of streaming state ops that share one key
         expression in a SINGLE applyInPandasWithState pass — N
         stateful mechanisms, ONE shuffle and ONE state-store
-        round-trip per micro-batch instead of N of each.
+        round-trip per micro-batch instead of N of each. This is the
+        streaming path of every stateful family; only a lone Cache op
+        keeps its union resolver (``_join_cache_streaming``).
 
         This is not merely an optimization: Spark permits exactly ONE
         applyInPandasWithState per streaming query
@@ -1747,24 +1539,24 @@ class CompiledRuleset:
         multi-mechanism stateful rules streamable AND paying one
         exchange + one store pass where a hypothetical chain would
         pay N. Groups fusion cannot merge (different keys, inter-op
-        dependencies, cache ops) fail compile with an actionable
-        split, not a deep Spark error.
+        dependencies, a Cache whose writes key differently from its
+        reads) fail compile with an actionable split, not a deep
+        Spark error.
 
-        Semantics are pinned to the standalone resolvers: the fused
-        sort key (key, sec, ord) refines the window counter's
-        (key, sec) only among equal-timestamp rows, which cannot
-        change a range-window count (counts compare ``sec`` values,
-        not row positions); the sequence suffix fold sees the exact
-        standalone order. Equivalence is regression-tested against
-        the sequential (unfused) outputs AND the batch plans.
+        Semantics are pinned to the batch resolvers: rows fold in
+        (key, sec, ord) order; the ``ord`` tie-break among
+        equal-timestamp rows cannot change a range-window count
+        (counts compare ``sec`` values, not row positions), and the
+        sequence suffix fold sees the batch rows-window order.
+        Equivalence is regression-tested against the batch plans for
+        every family, alone and fused.
 
         Callers guarantee: every spec's key has the same column-node
-        string, all seq specs share one order expression, and no
+        string, all specs with an order expression share one, and no
         spec's inputs reference another fused op's output (the run
         detector in apply() flushes otherwise).
         """
         import json as _json
-        import os as _os
         import re as _re
 
         import pandas as pd
@@ -1775,8 +1567,8 @@ class CompiledRuleset:
         key_col = fspecs[0][1]["key_col"]
 
         ord_expr = F.lit(0.0)
-        for fam, sp in fspecs:
-            if fam in ("seq", "last", "rl", "tent") and sp["order_col"] is not None:
+        for _, sp in fspecs:
+            if sp.get("order_col") is not None:
                 ord_expr = sp["order_col"].cast("double")
                 break
 
@@ -2708,8 +2500,6 @@ class CompiledRuleset:
         high key cardinality; per-key semantics are preserved by
         per-key segment folds within the (key, ts)-sorted bucket)."""
         import json as _json
-        import os as _os
-
         import pandas as pd
         from pyspark.sql import types as T
 
@@ -2847,11 +2637,7 @@ class CompiledRuleset:
             outputMode="append",
             timeoutConf="NoTimeout",
         )
-        result = F.coalesce(F.col("__cval"), spec["default_col"])
-        if spec["gate"] is not None:
-            result = F.when(
-                F.coalesce(spec["gate"], F.lit(False)), result
-            ).otherwise(spec["default_col"])
+        result = _cache_result(spec, F.col("__cval"))
         return looked.select("*", result.alias(spec["name"])).drop("__cval")
 
     def release_cache_state(self) -> None:
@@ -2862,27 +2648,12 @@ class CompiledRuleset:
         self._cache_persists = []
 
     def _hoisted_feature_order(
-        self,
-        window_specs: dict,
-        cache_specs: dict,
-        seq_specs: dict | None = None,
-        distinct_specs: dict | None = None,
-        session_specs: dict | None = None,
-        last_specs: dict | None = None,
-        wsum_specs: dict | None = None,
-        age_specs: dict | None = None,
-        rl_specs: dict | None = None,
-        unique_specs: dict | None = None,
-        wminmax_specs: dict | None = None,
-        seen_specs: dict | None = None,
-        decay_specs: dict | None = None,
-        tent_specs: dict | None = None,
-        burst_specs: dict | None = None,
+        self, state_specs: dict[str, tuple[str, dict]]
     ) -> list[tuple[str, Optional[Column]]]:
         """Feature materialization order with STATE OPS HOISTED as
         early as their dependencies allow.
 
-        Why: the streaming window/cache ops ship every column of their
+        Why: the streaming state ops ship every column of their
         input frame through Arrow (python state fn) and back. In
         source order a state op defined after N features carries all N
         through that boundary — measured 5x throughput loss on the
@@ -2898,8 +2669,8 @@ class CompiledRuleset:
         an op earlier past non-dependencies cannot break any earlier
         entry, and dependents compiled after it stay after it (their
         relative order is unchanged). Dependencies are extracted from
-        the op's spec columns (key/increment/gate/default + paired
-        cache writes) via the unresolved column tree, with a raw
+        the op's spec columns (``_spec_cols``, paired Cache writes
+        included) via the unresolved column tree, with a raw
         mangled-token scan as a conservative superset for columns
         built from SQL strings; unknown names are ignored. Batch
         frames get the same order — feature columns are pure
@@ -2912,132 +2683,19 @@ class CompiledRuleset:
         cached = getattr(self, "_hoisted_order_cache", None)
         if cached is not None:
             return cached
-        seq_specs = seq_specs or {}
-        distinct_specs = distinct_specs or {}
-        session_specs = session_specs or {}
-        last_specs = last_specs or {}
-        wsum_specs = wsum_specs or {}
-        age_specs = age_specs or {}
-        rl_specs = rl_specs or {}
-        unique_specs = unique_specs or {}
-        wminmax_specs = wminmax_specs or {}
-        seen_specs = seen_specs or {}
-        decay_specs = decay_specs or {}
-        tent_specs = tent_specs or {}
-        burst_specs = burst_specs or {}
         entries = list(self.ctx.feature_exprs)
         pos = {name: i for i, (name, _) in enumerate(entries)}
         label_specs = {s["name"]: s for s in self.ctx.label_lookups}
-
-        def spec_cols(mangled: str) -> list[Column]:
-            if mangled in session_specs:
-                return [session_specs[mangled]["key_col"]]
-            if mangled in last_specs:
-                s = last_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in wsum_specs:
-                s = wsum_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in decay_specs:
-                s = decay_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in tent_specs:
-                s = tent_specs[mangled]
-                cols = [s["key_col"], s["state_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in age_specs:
-                return [age_specs[mangled]["key_col"]]
-            if mangled in burst_specs:
-                return [burst_specs[mangled]["key_col"]]
-            if mangled in rl_specs:
-                s = rl_specs[mangled]
-                cols = [s["key_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in distinct_specs:
-                s = distinct_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in unique_specs:
-                s = unique_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in wminmax_specs:
-                s = wminmax_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in seen_specs:
-                s = seen_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in seq_specs:
-                s = seq_specs[mangled]
-                cols = [s["key_col"], s["symbol_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in window_specs:
-                s = window_specs[mangled]
-                cols = [s["key_col"], s["incremented"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in cache_specs:
-                s = cache_specs[mangled]
-                cols = [s["key_col"], s["default_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                for st in s["sets"]:
-                    cols.append(st["key_col"])
-                    cols.append(st["value_col"])
-                    if st["gate"] is not None:
-                        cols.append(st["gate"])
-                return cols
-            return [label_specs[mangled]["entity_col"]]
 
         refs_of: dict[str, set] = {}
         state_ops: list[str] = []
         for name, defn in entries:
             if defn is None:
-                cols = spec_cols(name)
-                if (
-                    name in window_specs
-                    or name in cache_specs
-                    or name in seq_specs
-                    or name in distinct_specs
-                    or name in session_specs
-                    or name in last_specs
-                    or name in wsum_specs
-                    or name in age_specs
-                    or name in rl_specs
-                    or name in unique_specs
-                    or name in wminmax_specs
-                    or name in seen_specs
-                    or name in decay_specs
-                    or name in tent_specs
-                    or name in burst_specs
-                ):
+                if name in state_specs:
                     state_ops.append(name)
+                    cols = _spec_cols(state_specs[name][1])
+                else:
+                    cols = _spec_cols(label_specs[name])
             else:
                 cols = [defn]
             deps: set = set()
@@ -3105,40 +2763,18 @@ class CompiledRuleset:
         # collapses single-use chains and keeps multi-use expressions
         # shared (collapseProjectAlwaysInline=false), so the optimized
         # plan stays linear in ruleset size.
-        cache_specs = {s["name"]: s for s in getattr(self.ctx, "cache_lookups", [])}
-        window_specs = {s["name"]: s for s in getattr(self.ctx, "window_lookups", [])}
-        seq_specs = {s["name"]: s for s in getattr(self.ctx, "seq_lookups", [])}
-        distinct_specs = {
-            s["name"]: s for s in getattr(self.ctx, "distinct_lookups", [])
-        }
-        session_specs = {
-            s["name"]: s for s in getattr(self.ctx, "session_lookups", [])
-        }
-        last_specs = {s["name"]: s for s in getattr(self.ctx, "last_lookups", [])}
-        wsum_specs = {s["name"]: s for s in getattr(self.ctx, "wsum_lookups", [])}
-        age_specs = {s["name"]: s for s in getattr(self.ctx, "age_lookups", [])}
-        rl_specs = {
-            s["name"]: s for s in getattr(self.ctx, "ratelimit_lookups", [])
-        }
-        unique_specs = {
-            s["name"]: s for s in getattr(self.ctx, "unique_lookups", [])
-        }
-        wminmax_specs = {
-            s["name"]: s for s in getattr(self.ctx, "wminmax_lookups", [])
-        }
-        seen_specs = {s["name"]: s for s in getattr(self.ctx, "seen_lookups", [])}
-        decay_specs = {s["name"]: s for s in getattr(self.ctx, "decay_lookups", [])}
-        tent_specs = {s["name"]: s for s in getattr(self.ctx, "tent_lookups", [])}
-        burst_specs = {
-            s["name"]: s for s in getattr(self.ctx, "burst_lookups", [])
+        state_specs = {
+            sp["name"]: (fam, sp)
+            for fam, attr, _ in _STATE_FAMILIES
+            for sp in getattr(self.ctx, attr, [])
         }
         # STATE-OP FUSION (streaming only): a maximal run of
-        # consecutive window/seq state ops sharing one key expression
-        # resolves through a single applyInPandasWithState — one
-        # exchange + one state-store pass for N mechanisms. Runs break
-        # on: a non-window/seq entry, a different key node, a second
-        # seq order expression, or an op whose inputs reference a
-        # fused op's output (it must see that column materialized).
+        # consecutive state ops sharing one key expression resolves
+        # through a single applyInPandasWithState — one exchange + one
+        # state-store pass for N mechanisms. Runs break on: a
+        # non-state entry, a different key node, a second order
+        # expression, or an op whose inputs reference a fused op's
+        # output (it must see that column materialized).
         streaming = df.isStreaming
 
         def _node(col) -> str:
@@ -3152,10 +2788,10 @@ class CompiledRuleset:
 
         def _register_pass(names: list[str]) -> None:
             # Spark allows ONE applyInPandasWithState per streaming
-            # query; fusion collapses same-key window/seq runs into
-            # one, but groups split by key changes, inter-op
-            # dependencies, or cache ops cannot share a pass. Fail
-            # here with the split, not deep inside Spark's
+            # query; fusion collapses same-key runs into one, but
+            # groups split by key changes, inter-op dependencies, or a
+            # cross-key Cache cannot share a pass. Fail here with the
+            # split, not deep inside Spark's
             # UnsupportedOperationChecker (or a scratch-column
             # resolution error) when the second pass builds.
             if streaming and state_passes:
@@ -3168,100 +2804,37 @@ class CompiledRuleset:
                     "Spark supports a single applyInPandasWithState per "
                     "query. Stateful features stream together only when they "
                     "share one key expression, do not read each other's "
-                    "outputs, and do not mix with Cache* ops; split the "
-                    "ruleset or evaluate the extra features in batch."
+                    "outputs, and do not mix with a Cache whose Set writes "
+                    "key differently from its Get; split the ruleset or "
+                    "evaluate the extra features in batch."
                 )
             state_passes.append(names)
 
         def _flush(frame: DataFrame) -> DataFrame:
             if not pending:
                 return frame
-            _register_pass([sp["name"] for _, sp in pending])
-            if len(pending) == 1 and pending[0][0] not in (
-                "wdistinct",
-                "sess",
-                "last",
-                "wsum",
-                "age",
-                "rl",
-                "unique",
-                "wminmax",
-                "seen",
-                "decay",
-                "tent",
-                "burst",
-            ):
-                fam, sp = pending[0]
-                if fam == "window":
-                    frame = self._join_window_count(frame, sp)
-                elif fam == "seq":
-                    frame = self._join_seq_match(frame, sp)
-                else:
-                    frame = self._join_cache(frame, sp)
-            else:
-                group = list(pending)
-                frame = self._join_fused_state(frame, group)
-                # cache entries come back as raw "__fcv_{i}" lookup
-                # columns; apply default/gate JVM-side exactly like
-                # the standalone resolver's tail
-                for i, (fam, sp) in enumerate(group):
-                    if fam != "cache":
-                        continue
-                    result = F.coalesce(F.col(f"__fcv_{i}"), sp["default_col"])
-                    if sp["gate"] is not None:
-                        result = F.when(
-                            F.coalesce(sp["gate"], F.lit(False)), result
-                        ).otherwise(sp["default_col"])
-                    frame = frame.select("*", result.alias(sp["name"])).drop(
-                        f"__fcv_{i}"
-                    )
+            group = list(pending)
             pending.clear()
+            _register_pass([sp["name"] for _, sp in group])
+            if len(group) == 1 and group[0][0] == "cache":
+                # the union resolver is the only path that routes Set
+                # writes keyed differently from the Get
+                return self._join_cache(frame, group[0][1])
+            frame = self._join_fused_state(frame, group)
+            # cache entries come back as raw "__fcv_{i}" lookup
+            # columns; apply default/gate JVM-side
+            for i, (fam, sp) in enumerate(group):
+                if fam == "cache":
+                    frame = frame.select(
+                        "*", _cache_result(sp, F.col(f"__fcv_{i}")).alias(sp["name"])
+                    ).drop(f"__fcv_{i}")
             return frame
 
-        def _spec_refs(fam: str, sp: dict) -> set:
-            cols = [sp["key_col"]]
-            if fam == "window":
-                cols.append(sp["incremented"])
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-            elif fam == "seq":
-                cols.append(sp["symbol_col"])
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            elif fam in ("wdistinct", "unique", "wminmax", "seen"):
-                cols.append(sp["value_col"])
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-            elif fam in ("sess", "age", "burst"):
-                pass  # only the key
-            elif fam == "rl":
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            elif fam == "last":
-                cols.append(sp["value_col"])
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            elif fam in ("wsum", "decay"):
-                cols.append(sp["value_col"])
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-            elif fam == "tent":
-                cols.append(sp["state_col"])
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            else:  # cache
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-                cols.append(sp["default_col"])
-                for s in sp["sets"]:
-                    cols.append(s["key_col"])
-                    cols.append(s["value_col"])
-                    if s["gate"] is not None:
-                        cols.append(s["gate"])
-            refs: set = set()
-            for c in cols:
-                refs |= _column_refs(c)
-            return refs
+        def _cross_key_cache(fam: str, sp: dict) -> bool:
+            if fam != "cache":
+                return False
+            key_node = _node(sp["key_col"])
+            return any(_node(s["key_col"]) != key_node for s in sp["sets"])
 
         def _fusable(fam: str, sp: dict) -> bool:
             if not pending:
@@ -3269,180 +2842,43 @@ class CompiledRuleset:
             key_node = _node(pending[0][1]["key_col"])
             if _node(sp["key_col"]) != key_node:
                 return False
-            if fam == "cache":
-                # every Set statement must write through the SAME key
-                # the fused pass groups by, or its writes would land
-                # in the wrong bucket
-                for s in sp["sets"]:
-                    if _node(s["key_col"]) != key_node:
-                        return False
-            if fam in ("seq", "last", "rl", "tent") and sp["order_col"] is not None:
-                for pf, psp in pending:
+            if sp.get("order_col") is not None:
+                # the fused pass sorts by ONE order expression
+                for _, psp in pending:
                     if (
-                        pf in ("seq", "last", "rl", "tent")
-                        and psp["order_col"] is not None
+                        psp.get("order_col") is not None
                         and _node(psp["order_col"]) != _node(sp["order_col"])
                     ):
                         return False
             emitted = {psp["name"] for _, psp in pending}
-            return not (_spec_refs(fam, sp) & emitted)
+            refs: set = set()
+            for c in _spec_cols(sp):
+                refs |= _column_refs(c)
+            return not (refs & emitted)
 
-        for mangled, defn in self._hoisted_feature_order(
-            window_specs,
-            cache_specs,
-            seq_specs,
-            distinct_specs,
-            session_specs,
-            last_specs,
-            wsum_specs,
-            age_specs,
-            rl_specs,
-            unique_specs,
-            wminmax_specs,
-            seen_specs,
-            decay_specs,
-            tent_specs,
-            burst_specs,
-        ):
-            if defn is None:
-                if streaming and mangled in rl_specs:
-                    sp = rl_specs[mangled]
-                    if not _fusable("rl", sp):
-                        df = _flush(df)
-                    pending.append(("rl", sp))
-                    continue
-                if streaming and mangled in unique_specs:
-                    sp = unique_specs[mangled]
-                    if not _fusable("unique", sp):
-                        df = _flush(df)
-                    pending.append(("unique", sp))
-                    continue
-                if streaming and mangled in wminmax_specs:
-                    sp = wminmax_specs[mangled]
-                    if not _fusable("wminmax", sp):
-                        df = _flush(df)
-                    pending.append(("wminmax", sp))
-                    continue
-                if streaming and mangled in seen_specs:
-                    sp = seen_specs[mangled]
-                    if not _fusable("seen", sp):
-                        df = _flush(df)
-                    pending.append(("seen", sp))
-                    continue
-                if streaming and mangled in age_specs:
-                    sp = age_specs[mangled]
-                    if not _fusable("age", sp):
-                        df = _flush(df)
-                    pending.append(("age", sp))
-                    continue
-                if streaming and mangled in wsum_specs:
-                    sp = wsum_specs[mangled]
-                    if not _fusable("wsum", sp):
-                        df = _flush(df)
-                    pending.append(("wsum", sp))
-                    continue
-                if streaming and mangled in decay_specs:
-                    sp = decay_specs[mangled]
-                    if not _fusable("decay", sp):
-                        df = _flush(df)
-                    pending.append(("decay", sp))
-                    continue
-                if streaming and mangled in tent_specs:
-                    sp = tent_specs[mangled]
-                    if not _fusable("tent", sp):
-                        df = _flush(df)
-                    pending.append(("tent", sp))
-                    continue
-                if streaming and mangled in burst_specs:
-                    sp = burst_specs[mangled]
-                    if not _fusable("burst", sp):
-                        df = _flush(df)
-                    pending.append(("burst", sp))
-                    continue
-                if streaming and mangled in last_specs:
-                    sp = last_specs[mangled]
-                    if not _fusable("last", sp):
-                        df = _flush(df)
-                    pending.append(("last", sp))
-                    continue
-                if streaming and mangled in session_specs:
-                    sp = session_specs[mangled]
-                    if not _fusable("sess", sp):
-                        df = _flush(df)
-                    pending.append(("sess", sp))
-                    continue
-                if streaming and mangled in distinct_specs:
-                    sp = distinct_specs[mangled]
-                    if not _fusable("wdistinct", sp):
-                        df = _flush(df)
-                    pending.append(("wdistinct", sp))
-                    continue
-                if streaming and mangled in window_specs:
-                    sp = window_specs[mangled]
-                    if not _fusable("window", sp):
-                        df = _flush(df)
-                    pending.append(("window", sp))
-                    continue
-                if streaming and mangled in seq_specs:
-                    sp = seq_specs[mangled]
-                    if not _fusable("seq", sp):
-                        df = _flush(df)
-                    pending.append(("seq", sp))
-                    continue
-                if streaming and mangled in cache_specs:
-                    sp = cache_specs[mangled]
-                    key_node = _node(sp["key_col"])
-                    internal_ok = all(
-                        _node(s["key_col"]) == key_node for s in sp["sets"]
-                    )
-                    if not internal_ok:
-                        # writes keyed differently from the reads:
-                        # only the standalone union resolver can
-                        # route them — force a singleton pass
-                        df = _flush(df)
-                        pending.append(("cache", sp))
-                        df = _flush(df)
-                        continue
-                    if not _fusable("cache", sp):
-                        df = _flush(df)
-                    pending.append(("cache", sp))
-                    continue
-                df = _flush(df)
-                if mangled in cache_specs:
-                    df = self._join_cache(df, cache_specs[mangled])
-                elif mangled in window_specs:
-                    df = self._join_window_count(df, window_specs[mangled])
-                elif mangled in seq_specs:
-                    df = self._join_seq_match(df, seq_specs[mangled])
-                elif mangled in distinct_specs:
-                    df = self._join_window_distinct(df, distinct_specs[mangled])
-                elif mangled in session_specs:
-                    df = self._join_session_count(df, session_specs[mangled])
-                elif mangled in last_specs:
-                    df = self._join_last_value(df, last_specs[mangled])
-                elif mangled in wsum_specs:
-                    df = self._join_window_sum(df, wsum_specs[mangled])
-                elif mangled in age_specs:
-                    df = self._join_key_age(df, age_specs[mangled])
-                elif mangled in burst_specs:
-                    df = self._join_burstiness(df, burst_specs[mangled])
-                elif mangled in rl_specs:
-                    df = self._join_rate_limit(df, rl_specs[mangled])
-                elif mangled in unique_specs:
-                    df = self._join_unique_count(df, unique_specs[mangled])
-                elif mangled in wminmax_specs:
-                    df = self._join_window_minmax(df, wminmax_specs[mangled])
-                elif mangled in seen_specs:
-                    df = self._join_seen_before(df, seen_specs[mangled])
-                elif mangled in decay_specs:
-                    df = self._join_decay_score(df, decay_specs[mangled])
-                elif mangled in tent_specs:
-                    df = self._join_transition_entropy(df, tent_specs[mangled])
-                else:
-                    df = self._join_label(df, labels_df, specs[mangled])
-            else:
+        resolvers = {fam: meth for fam, _, meth in _STATE_FAMILIES}
+        for mangled, defn in self._hoisted_feature_order(state_specs):
+            if defn is not None:
                 df = _flush(df)
                 df = df.select("*", defn.alias(mangled))
+            elif mangled not in state_specs:
+                df = _flush(df)
+                df = self._join_label(df, labels_df, specs[mangled])
+            elif not streaming:
+                fam, sp = state_specs[mangled]
+                df = getattr(self, resolvers[fam])(df, sp)
+            else:
+                fam, sp = state_specs[mangled]
+                if _cross_key_cache(fam, sp):
+                    # only the union resolver can route its writes:
+                    # force a singleton pass
+                    df = _flush(df)
+                    pending.append((fam, sp))
+                    df = _flush(df)
+                    continue
+                if not _fusable(fam, sp):
+                    df = _flush(df)
+                pending.append((fam, sp))
         df = _flush(df)
         # Output-name collision guard: the result frame must be usable
         # under Spark's DEFAULT case-insensitive resolution, not just

@@ -298,8 +298,9 @@ def _window_count(ctx, call, args, increments: bool):
 
     # deferred: CompiledRuleset.apply picks the physical strategy at
     # plan time — batch frames get an event-time range window; a
-    # STREAMING frame gets applyInPandasWithState (non-time window
-    # functions are illegal on streams), same semantics either way
+    # STREAMING frame folds in the fused applyInPandasWithState state
+    # pass (non-time window functions are illegal on streams), same
+    # semantics either way
     if not hasattr(ctx, "window_lookups"):
         ctx.window_lookups = []
     name = f"__wc_{len(ctx.window_lookups)}"
@@ -900,9 +901,9 @@ def sequence_matches(ctx, call, args):
     rolling suffix, so ^/$ would mean "exactly K events ago", a trap).
 
     Physical strategy is deferred to apply(): batch frames get a
-    rows-between window (one shuffle on the key); streaming frames a
-    key-coalesced applyInPandasWithState op whose state is the ≤K-char
-    suffix per key (bounded, exactly the reference's tool_seq shape).
+    rows-between window (one shuffle on the key); streaming frames fold
+    in the fused state pass, whose state is the ≤K-char suffix per key
+    (bounded, exactly the reference's tool_seq shape).
     """
     key_v = arg(ctx, call, args, "key")
     sym_v = arg(ctx, call, args, "symbol")

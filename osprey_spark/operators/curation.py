@@ -184,15 +184,6 @@ def decontaminate_bloom(
     )
 
 
-def bloom_position_sql(shingle_expr: str, j: int, m: int = 65536) -> str:
-    """DuckDB expression replaying one :func:`_bloom_positions` hash:
-    hex slice ``j % 4`` of the md5 digest seeded ``bloom:{j // 4}:``."""
-    return (
-        f"CAST(('0x' || substr(md5('bloom:{j // 4}:' || CAST({shingle_expr} AS VARCHAR)), "
-        f"{1 + 8 * (j % 4)}, 8)) AS BIGINT) % {m}"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Gopher-style quality filter
 # ---------------------------------------------------------------------------

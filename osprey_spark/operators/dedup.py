@@ -1,8 +1,8 @@
 """Deduplication operators over a documents table.
 
 Training-data-pipeline additions (not in the reference engine, which
-has no corpus ops): exact, fingerprint, MinHash+LSH, SimHash, n-gram
-Jaccard, embedding-cosine near-dup. All are built from DataFrame ops:
+has no corpus ops): MinHash+LSH, SimHash, n-gram Jaccard, winnowing,
+duplicate spans. All are built from DataFrame ops:
 the LSH family turns O(n²) similarity into equi-joins on band/bucket
 keys — the only strategy that survives 100 TB (the candidate join
 shuffles on band key; exact verification runs only on candidates).
@@ -39,32 +39,6 @@ def shingles(text_col: Column, k: int = 3) -> Column:
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact dedup by content hash: one hash-aggregate, keeper =
-    min(id). Output: one row per duplicate *group* (n_dups ≥ 2)."""
-    h = F.md5(F.col(text_col).cast("binary")).alias("content_hash")
-    return (
-        df.select(h, F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_dups"))
-        .filter(F.col("n_dups") >= 2)
-        .orderBy("content_hash")
-    )
-
-
-def fingerprint_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Key-collision dedup on the sorted-unique-token fingerprint —
-    catches word-order shuffles exact dedup misses."""
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(F.col(text_col)))), " ").cast("binary"))
-    return (
-        df.select(fp.alias("fingerprint"), F.col(id_col))
-        .groupBy("fingerprint")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_dups"))
-        .filter(F.col("n_dups") >= 2)
-        .orderBy("fingerprint")
-    )
-
-
 def shingle_digests(shingle_col: Column, n_digests: int) -> Column:
     """Per shingle: concat of ``n_digests`` seeded md5 hex digests
     (seed prefix 'd|'). Each 32-hex digest is sliced into four 8-hex
@@ -92,15 +66,6 @@ def minhash_signature_from_digests(digs_col: Column, n_hashes: int = 8) -> Colum
 
     sigs = [F.array_min(F.transform(digs_col, _slice(j))) for j in range(n_hashes)]
     return F.array(*sigs)
-
-
-def minhash_signature(text_col: Column, n_hashes: int = 8, k: int = 3) -> Column:
-    """MinHash signature of a text column (see
-    minhash_signature_from_digests; inside minhash_lsh_pairs the
-    digest array is materialized as its own column so the md5 work is
-    shared across all slices)."""
-    digs = shingle_digests(shingles(text_col, k), (n_hashes + 3) // 4)
-    return minhash_signature_from_digests(digs, n_hashes)
 
 
 def minhash_bands(sig_col: Column, n_bands: int = 4, rows_per_band: int = 2) -> list[Column]:

@@ -473,35 +473,6 @@ ORDER BY query_id, rank
 """
 
 
-def embedding_near_dup_pairs(
-    vectors: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 6,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH bucket self-join
-    + exact-cosine verification (the embedding leg of the dedup
-    suite)."""
-    v = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        lsh_bucket(F.col(vec_col), dim, n_planes).alias("_bkt"),
-    )
-    a, b = v.alias("a"), v.alias("b")
-    cand = a.join(b, (F.col("a._bkt") == F.col("b._bkt")) & (F.col("a._id") < F.col("b._id")))
-    return (
-        cand.select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.round(cosine(F.col("a._vec"), F.col("b._vec")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-
-
 def semantic_dedup(
     vectors: DataFrame,
     dim: int,

@@ -108,18 +108,6 @@ def rate_rule_counts(
     return counts.filter(F.col("n") >= threshold).orderBy("window_start", key)
 
 
-def running_turn_stats(df: DataFrame, key: str, order_cols: Sequence[str]) -> DataFrame:
-    """Per-key running counters (prior-verdict/tool-sequence style
-    escalation state, batch form). Window spec reused across all
-    aggregates → single sort per partition."""
-    w = (
-        Window.partitionBy(key)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn("turns_so_far", F.count(F.lit(1)).over(w))
-
-
 def interval_concurrency(
     df: DataFrame,
     key_col: str = "conv_id",

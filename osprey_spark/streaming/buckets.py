@@ -38,6 +38,14 @@ process restarts (same session, same cores) resolve identically by
 construction.  ``record_bucket_count`` / ``recorded_bucket_count``
 persist the resolved value as a sidecar next to a checkpoint so
 engines can re-pin automatically.
+
+STATE LAYOUT: the sidecar also records ``STATE_LAYOUT``, the version
+of the state-store layout the compiled state ops write (bucket column
+and state schema).  Spark does not detect a resumed checkpoint whose
+state was written under another layout — the first batch dies inside
+a Python worker — so ``check_checkpoint`` refuses one up front, as it
+refuses a checkpoint with Spark progress but no sidecar (its bucket
+count and layout are unknown).
 """
 
 from __future__ import annotations
@@ -51,6 +59,11 @@ TARGET_KEYS_PER_BUCKET = 4096
 _FALLBACK_BUCKETS = 1024  # no env, no active session: rounds 1-4 constant
 
 _SIDECAR = "state_buckets.json"
+
+# Bump on any change that makes existing state unreadable. Layout 1:
+# every streaming state op but a lone Cache folds in the fused pass
+# (``states_json`` under ``__fs_bkt``).
+STATE_LAYOUT = 1
 
 
 def state_bucket_count(n_keys: Optional[int] = None) -> int:
@@ -90,14 +103,51 @@ def record_bucket_count(checkpoint_dir: str, n: Optional[int] = None) -> int:
     path = os.path.join(checkpoint_dir, _SIDECAR)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"state_buckets": int(n)}, f)
+        json.dump({"state_buckets": int(n), "state_layout": STATE_LAYOUT}, f)
     os.replace(tmp, path)
     return int(n)
 
 
-def recorded_bucket_count(checkpoint_dir: str) -> Optional[int]:
+def _sidecar(checkpoint_dir: str) -> Optional[dict]:
     path = os.path.join(checkpoint_dir, _SIDECAR)
     if not os.path.exists(path):
         return None
     with open(path) as f:
-        return int(json.load(f)["state_buckets"])
+        return json.load(f)
+
+
+def recorded_bucket_count(checkpoint_dir: str) -> Optional[int]:
+    rec = _sidecar(checkpoint_dir)
+    return None if rec is None else int(rec["state_buckets"])
+
+
+def check_checkpoint(checkpoint_dir: str) -> None:
+    """Record the sidecar on a fresh checkpoint; raise ValueError when
+    an existing one cannot be resumed safely: Spark progress (``offsets/`` or ``commits/``)
+    but no sidecar, a state layout other than ``STATE_LAYOUT`` (or
+    none recorded), or a recorded bucket count this session does not
+    resolve."""
+    rec = _sidecar(checkpoint_dir)
+    if rec is None and any(
+        os.path.isdir(os.path.join(checkpoint_dir, d)) for d in ("offsets", "commits")
+    ):
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} has Spark progress but no {_SIDECAR} "
+            "(written by an older engine): its state bucket count and layout "
+            "are unknown, so it cannot be resumed; start a new checkpoint"
+        )
+    if rec is not None and rec.get("state_layout") != STATE_LAYOUT:
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} was written with state layout "
+            f"{rec.get('state_layout')} but this engine uses {STATE_LAYOUT}; "
+            "its state cannot be read, so start a new checkpoint"
+        )
+    recorded = record_bucket_count(checkpoint_dir)
+    current = state_bucket_count()
+    if recorded != current:
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} was created with "
+            f"{recorded} state buckets but this session resolves "
+            f"{current} (cores or env changed); set "
+            f"OSPREY_WC_STATE_BUCKETS={recorded} to resume safely"
+        )

@@ -116,7 +116,7 @@ def decode_json_dict_state(state_df: DataFrame) -> DataFrame:
 
     Works for every single-string-column state this engine writes
     (states_json / entries_json / mins_json / latest_json /
-    suffix_json / bins_json ...). Raises on multi-column or
+    bins_json ...). Raises on multi-column or
     non-string state — those are not the coalesced-dict shape.
     """
     vfields = state_df.schema["value"].dataType.fields

@@ -108,19 +108,12 @@ class StreamingRuleEngine:
         # state-bucket checkpoint stability (streaming/buckets.py): the
         # bucket id is the state-store key, so resuming a checkpoint
         # with a different resolved count would strand every key's
-        # state in its old bucket. Record the count on first run and
-        # fail LOUDLY on mismatch instead of silently losing state.
-        from .buckets import record_bucket_count, state_bucket_count
+        # state in its old bucket, and one written under another state
+        # layout would crash its first batch. Record both on first run
+        # and fail LOUDLY on mismatch instead.
+        from .buckets import check_checkpoint
 
-        recorded = record_bucket_count(self.checkpoint_dir)
-        current = state_bucket_count()
-        if recorded != current:
-            raise ValueError(
-                f"checkpoint {self.checkpoint_dir} was created with "
-                f"{recorded} state buckets but this session resolves "
-                f"{current} (cores or env changed); set "
-                f"OSPREY_WC_STATE_BUCKETS={recorded} to resume safely"
-            )
+        check_checkpoint(self.checkpoint_dir)
         if tee is not None:
             self.sink = MultiSink(output_dir, tee, console=tee_console)
         else:

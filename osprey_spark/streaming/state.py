@@ -13,7 +13,6 @@ is read-your-writes (matching osprey's cross-event visibility).
 from __future__ import annotations
 
 import json
-import os
 from typing import Iterator, Tuple
 
 from .buckets import state_bucket_count
@@ -29,14 +28,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
-)
-
-CONV_STATE_SCHEMA = StructType(
-    [
-        StructField("n_turns", LongType()),
-        StructField("n_flagged", LongType()),
-        StructField("tool_seq", StringType()),  # comma-joined last K tools
-    ]
 )
 
 CONV_OUTPUT_SCHEMA = StructType(
@@ -155,77 +146,6 @@ def conversation_state(
         stateStructType=StructType([StructField("state_json", StringType())]),
         outputMode="append",
         timeoutConf="NoTimeout",
-    )
-
-
-def conversation_state_tws(
-    turns: DataFrame,
-    flagged_col: str,
-    escalate_after: int = 3,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """conversation_state on the Spark 4 transformWithStateInPandas
-    API: same semantics/output schema as the applyInPandasWithState
-    version (equivalence-tested), with state in a named ValueState of
-    the new state-store API — typed handles, TTL support, RocksDB
-    changelog checkpointing on a real cluster: the forward path for
-    10^12-turn state. NOTE: the TWS state-server protocol requires
-    the ``protobuf`` package, which this container lacks — the test
-    is importorskip-gated; on a normal cluster image it runs as-is."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Proc(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("conv", CONV_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (conv_id,) = key
-            got = self._state.get() if self._state.exists() else None
-            n_turns, n_flagged, tool_seq = got if got is not None else (0, 0, "")
-            tools = tool_seq.split(",") if tool_seq else []
-            for pdf in rows:
-                pdf = pdf.sort_values("turn_idx")
-                out_turns, out_flagged, out_seq, out_esc = [], [], [], []
-                for flagged, tool in zip(pdf["flagged"].values, pdf["tool"].values):
-                    n_turns += 1
-                    if flagged:
-                        n_flagged += 1
-                    if isinstance(tool, str) and tool:
-                        tools.append(tool)
-                        tools = tools[-TOOL_SEQ_K:]
-                    out_turns.append(n_turns)
-                    out_flagged.append(n_flagged)
-                    out_seq.append(",".join(tools))
-                    out_esc.append(n_flagged >= escalate_after)
-                yield pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "turn_idx": pdf["turn_idx"].values,
-                        "ts": pdf["ts"].values,
-                        "turns_so_far": out_turns,
-                        "flagged_so_far": out_flagged,
-                        "tool_seq": out_seq,
-                        "escalated": out_esc,
-                    }
-                )
-            self._state.update((n_turns, n_flagged, ",".join(tools)))
-
-        def close(self):
-            pass
-
-    src = (
-        turns.withWatermark("ts", watermark)
-        .select(
-            "conv_id",
-            "turn_idx",
-            "ts",
-            F.col("tool").cast("string").alias("tool"),
-            F.coalesce(F.col(flagged_col), F.lit(False)).alias("flagged"),
-        )
-        .groupBy("conv_id")
-    )
-    return src.transformWithStateInPandas(
-        Proc(), outputStructType=CONV_OUTPUT_SCHEMA, outputMode="append", timeMode="None"
     )
 
 

@@ -1,9 +1,8 @@
 """Watermarked streaming window aggregations.
 
 Event-time parity for the reference's Redis window counters
-(ref: example_plugins/src/udfs/cache.py:333-347) plus the north-rule
-session windows. Late data beyond the watermark is dropped (append
-mode) — the policy the tests pin down.
+(ref: example_plugins/src/udfs/cache.py:333-347). Late data beyond the
+watermark is dropped (append mode) — the policy the tests pin down.
 """
 
 from __future__ import annotations
@@ -26,49 +25,6 @@ def streaming_tumbling_counts(
         .groupBy(F.window(F.col(ts_col), f"{size_seconds} seconds").alias("w"), *keys)
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").cast("long").alias("window_start"), *keys, "n")
-    )
-
-
-def streaming_sliding_counts(
-    stream: DataFrame,
-    ts_col: str,
-    keys: Sequence[str],
-    size_seconds: int,
-    slide_seconds: int,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(
-                F.col(ts_col), f"{size_seconds} seconds", f"{slide_seconds} seconds"
-            ).alias("w"),
-            *keys,
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").cast("long").alias("window_start"), *keys, "n")
-    )
-
-
-def streaming_session_counts(
-    stream: DataFrame,
-    ts_col: str,
-    key: str,
-    gap_seconds: int,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Session windows keyed by conv_id with event-time watermark
-    (north rule)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), f"{gap_seconds} seconds").alias("w"), key)
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col(key),
-            F.col("w.start").cast("long").alias("session_start"),
-            F.col("w.end").cast("long").alias("session_end"),
-            "n_turns",
-        )
     )
 
 

@@ -1,17 +1,20 @@
-"""State-op fusion: consecutive streaming window/seq state ops that
-share one key expression resolve through a SINGLE
-applyInPandasWithState pass (one exchange + one state-store
-round-trip for N mechanisms).
+"""The fused state pass: every streaming state op resolves through
+``_join_fused_state``. A run of consecutive ops that share one key
+expression folds in a SINGLE applyInPandasWithState (one exchange +
+one state-store round-trip for N mechanisms), and a lone op takes the
+same path. Only a lone Cache keeps its union resolver, the one path
+that routes Set writes keyed differently from the Get.
 
-Contract: fused output is identical to both the sequential unfused
-streaming path and the batch plans; fusion must NOT engage across a
-key change or a dependency on a fused op's output.
+Contract: streaming output equals the batch plans, fused or alone;
+fusion must NOT engage across a key change or a dependency on a fused
+op's output.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from osprey_spark.compiler import compile_ruleset
@@ -248,6 +251,37 @@ def test_cross_key_cache_cannot_fuse(spark, tmp_path):
     stream = spark.readStream.schema(t.schema).parquet(in_dir)
     with pytest.raises(ValueError, match="stateful passes"):
         rs.apply(with_envelope(stream), passthrough=["conv_id", "turn_idx"])
+
+
+CACHE_CROSS_KEY_ALONE_SML = """
+K: str = JsonData(path='$.conv_id')
+R: str = JsonData(path='$.role')
+K2: str = JsonData(path='$.conv_id')
+Text: str = JsonData(path='$.text')
+CacheSetStr(key=K, value=Text, ttl_seconds=3600.0)
+LastText = CacheGetStr(key={get_key}, default='none')
+"""
+
+
+@pytest.mark.parametrize("get_key", ["R", "K2"])
+def test_cross_key_cache_alone_matches_batch(spark, tmp_path, get_key):
+    """A lone Cache whose Set writes key differently from its Get is
+    the one streaming state op outside the fused pass: the union
+    resolver routes it, in one state pass, equal to batch. ``R`` (the
+    role) never equals a written conv_id, so every probe misses;
+    ``K2`` is a second feature with the conv_id values, so probes hit
+    writes made under another key expression."""
+    sml = CACHE_CROSS_KEY_ALONE_SML.replace("{get_key}", get_key)
+    rs, in_dir = _stream_vs_batch(spark, tmp_path, sml, ["LastText"])
+    stream = spark.readStream.schema(
+        spark.read.parquet(in_dir).schema
+    ).parquet(in_dir)
+    out = rs().apply(with_envelope(stream), passthrough=["conv_id", "turn_idx"])
+    assert _n_state_nodes(out) == 1
+    hits = rs().apply(
+        with_envelope(spark.read.parquet(in_dir)), passthrough=["conv_id"]
+    ).filter(F.col("LastText") != "none").count()
+    assert (hits > 0) == (get_key == "K2")
 
 
 NEW_FAMILIES_SML = """

@@ -461,48 +461,6 @@ def test_streaming_sampling_deterministic_across_resume(spark, tmp_path):
     assert all(roles[k] != "tool" for k in kept1)
 
 
-def test_conversation_state_tws_equivalent(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas variant emits exactly the
-    applyInPandasWithState operator's rows. The TWS state-server
-    protocol needs the protobuf package, absent from this container
-    (documented, like the Kafka jars) — skipped when unavailable."""
-    pytest.importorskip("google.protobuf")
-    from osprey_spark.streaming.state import conversation_state, conversation_state_tws
-
-    in_dir = str(tmp_path / "in")
-    rows = []
-    for conv in ("c1", "c2", "c3"):
-        for i in range(5):
-            flagged = (hash(conv) + i) % 3 == 0
-            rows.append((conv, i, "user", "hello" if flagged else "x",
-                         "exec" if i % 2 == 0 else None, f"2024-01-01 10:{i:02d}:00"))
-    (
-        spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, role string, text string, tool string, ts_str string"
-        )
-        .select("conv_id", "turn_idx", "role", "text", "tool", F.to_timestamp("ts_str").alias("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(in_dir)
-    )
-
-    def run(op, name):
-        stream = spark.readStream.schema(TURNS_SCHEMA).parquet(in_dir)
-        flagged = stream.withColumn("flagged", F.col("text").contains("hello"))
-        q = (op(flagged, "flagged", escalate_after=2)
-             .writeStream.outputMode("append").format("memory").queryName(name)
-             .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return {
-            (r["conv_id"], r["turn_idx"]):
-                (r["turns_so_far"], r["flagged_so_far"], r["tool_seq"], r["escalated"])
-            for r in spark.sql(f"select * from {name}").collect()
-        }
-
-    a = run(conversation_state, "cs_apply")
-    b = run(conversation_state_tws, "cs_tws")
-    assert a == b and len(a) == 15
-
-
 def test_metrics_listener_records_state_and_watermark(spark, tmp_path):
     """North rule: metrics = rows processed, state size, watermark lag.
     Attach the JSON listener to a watermarked stateful query and check

@@ -1,24 +1,12 @@
-"""transformWithStateInPandas port of the window-counter family
-(round-5, verdict item 4).
-
-``OSPREY_STATE_ENGINE=tws`` switches the streaming IncrementWindow
-resolver from ``applyInPandasWithState`` to the Spark 4
-``transformWithStateInPandas`` API (compile.py `_join_window_count`);
-both engines share the same per-batch ``fold``, so outputs are equal
-by construction — these tests pin that with the same stream==batch
-equivalence and checkpoint-restart contracts the apply engine runs.
-
-The TWS state-server protocol needs the ``protobuf`` package, absent
-from this container (documented, like the Kafka jars) — the tws
-parameterizations skip when unavailable and run as-is on a standard
-cluster image.
+"""A lone streaming IncrementWindow: it folds in the fused state pass
+like every stateful family, and must equal the batch range-window
+count and carry its in-window deque across a checkpoint restart.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from osprey_spark.compiler import compile_ruleset
@@ -42,14 +30,6 @@ ROWS2 = [
     ("c2", 1, "user", "d", None, "2024-01-01 10:11:00"),
 ]
 
-def _protobuf_missing() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return False
-    except ImportError:
-        return True
-
 
 def _write(spark, in_dir, rows):
     (
@@ -68,15 +48,7 @@ def _write(spark, in_dir, rows):
     )
 
 
-@pytest.fixture(params=["apply", "tws"])
-def engine(request, monkeypatch):
-    if request.param == "tws" and _protobuf_missing():
-        pytest.skip("transformWithStateInPandas needs protobuf (env gap)")
-    monkeypatch.setenv("OSPREY_STATE_ENGINE", request.param)
-    return request.param
-
-
-def test_stream_equals_batch(spark, tmp_path, engine):
+def test_stream_equals_batch(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
     _write(spark, in_dir, ROWS1 + ROWS2)
@@ -99,7 +71,7 @@ def test_stream_equals_batch(spark, tmp_path, engine):
     assert streamed[("c1", 2)] == 3  # counts actually accumulated
 
 
-def test_state_survives_checkpoint_restart(spark, tmp_path, engine):
+def test_state_survives_checkpoint_restart(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     os.makedirs(in_dir)
